@@ -6,29 +6,31 @@ Bloom filter (operators/seen.py), with two properties Bloom lacks:
   * better FP rate at the same bits/item for typical loads (~0.84 load,
     8-bit fingerprints ⇒ ~0.4% FP vs ~1% for a 10-bit/item Bloom).
 
-Same state contract as the Bloom path: one filter per FIXED hash bucket
-(`pmod(url_hash, n_buckets)`), serialized as rows
-(bucket, n_slots, fp_bits, table binary) — checkpointable data,
-independent of executor count; probes ship via one sc.broadcast and run
-as a vectorized numpy pass inside mapInPandas. The exact anti-join stays
-authoritative (false positives never leak into results).
+`CUCKOO` is a `seen.SeenFilter` flavor: this module supplies only the
+per-bucket numpy kernels (build, add, probe, health, and delete);
+operators/seen.py runs the bucketing, broadcast, probe and cogroup
+scaffolding shared with the Bloom flavor. State rows are
+(bucket, n_slots, n_items, n_evicted, table binary) — checkpointable data,
+independent of executor count. The exact anti-join stays authoritative
+(false positives never leak into results).
 
 Layout: the classic (2,4)-cuckoo — n_slots buckets of 4 slots, two
 candidate buckets per item (i2 = i1 XOR hash(fingerprint)), 8-bit
 fingerprints, 0 = empty. Insertion uses the standard random-walk eviction
-(bounded kicks); the walk is per-item sequential by nature, so builds run
-as a batched python loop inside applyInPandas over the bucket GROUP — a
-state-build step over the round's NEW URLs only (same incremental
-discipline as seen.merge_bloom), never a per-row UDF in a row path.
+(bounded kicks); the walk is per-item sequential by nature, so it runs as
+a batched python loop inside the per-bucket group — over the round's NEW
+URLs only on incremental maintenance, never a per-row UDF in a row path.
 """
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from commoncrawlscalatools_spark.operators.seen import SeenFilter
 
 CUCKOO_STATE_SCHEMA = T.StructType(
     [
@@ -185,45 +187,107 @@ def _build_table_autosized(hashes: np.ndarray, n_slots: int) -> tuple[np.ndarray
     )
 
 
+def _table(row: dict) -> np.ndarray:
+    """A stored bucket's slot table as a writable (n_slots, 4) array."""
+    n_slots = int(row["n_slots"])
+    return np.frombuffer(row["table"], dtype=np.uint8).reshape(n_slots, SLOTS_PER_BUCKET).copy()
+
+
+def _build(hashes: np.ndarray, n_slots: int) -> dict:
+    """A fresh bucket at starting geometry `n_slots`, doubled until zero
+    evictions (n_evicted is always 0 here; n_slots records the geometry
+    actually used)."""
+    table, slots_used = _build_table_autosized(hashes, n_slots)
+    return {"n_slots": slots_used, "n_items": len(hashes), "n_evicted": 0,
+            "table": table.tobytes()}
+
+
+def _add(row: dict, hashes: np.ndarray) -> dict:
+    """Insert into a stored bucket. It CANNOT resize locally (the full hash
+    set isn't in hand), so an over-capacity insert surfaces as
+    n_evicted > 0 — `_health` turns that into a rebuild from the seen
+    table. New hashes are sorted so the bytes stay deterministic at any
+    partitioning."""
+    if len(hashes) == 0:
+        return row
+    table, evicted = _insert_all(_table(row), np.sort(hashes), int(row["n_slots"]))
+    return {**row, "n_items": int(row["n_items"]) + len(hashes),
+            "n_evicted": int(row["n_evicted"]) + evicted, "table": table.tobytes()}
+
+
+def _probe(entry: tuple, hashes: np.ndarray) -> np.ndarray:
+    """Both candidate buckets of each fingerprint, vectorized. The
+    no-false-negative guarantee holds iff n_evicted == 0 (an over-capacity
+    drop makes its item probe False); deletions intentionally create false
+    negatives (that IS un-seeing)."""
+    n_slots, blob = entry
+    table = np.frombuffer(blob, dtype=np.uint8).reshape(n_slots, SLOTS_PER_BUCKET)
+    fp = _fingerprints(hashes)
+    i1 = _index1(hashes, n_slots)
+    i2 = _alt_index(i1, fp, n_slots)
+    return (table[i1] == fp[:, None]).any(axis=1) | (table[i2] == fp[:, None]).any(axis=1)
+
+
+def _health(row: dict) -> tuple[int, bool, int]:
+    # an eviction is a FALSE NEGATIVE: rebuild at doubled geometry
+    evicted = int(row["n_evicted"])
+    return evicted, evicted > 0, int(row["n_slots"]) * 2
+
+
+def _delete(row: dict | None, hashes: np.ndarray) -> dict | None:
+    """Clear ONE matching slot per removed hash across its two candidate
+    buckets; removals for a bucket with no filter do nothing."""
+    if row is None:
+        return None
+    n_slots = int(row["n_slots"])
+    table = _table(row)
+    removed = 0
+    if len(hashes):
+        fps = _fingerprints(hashes)
+        i1s = _index1(hashes, n_slots)
+        i2s = _alt_index(i1s, fps, n_slots)
+        for fp, i1, i2 in zip(fps, i1s, i2s):
+            for idx in (int(i1), int(i2)):
+                slots = np.nonzero(table[idx] == fp)[0]
+                if len(slots):
+                    table[idx, slots[0]] = 0
+                    removed += 1
+                    break
+    return {**row, "n_items": int(row["n_items"]) - removed, "table": table.tobytes()}
+
+
+CUCKOO = SeenFilter(
+    "cuckoo", CUCKOO_STATE_SCHEMA, ("n_slots", "table"), _build, _add, _probe, _health,
+    geometry=1 << 12,
+)
+
+
+def cuckoo_filter(
+    n_buckets: int = 64, n_slots: int = 1 << 12, hash_col: str = "url_hash"
+) -> SeenFilter:
+    """`CUCKOO` bound to its bucketing and starting geometry. n_slots MUST
+    be a power of two (alt-index involution); capacity ≈ 0.84 · n_slots · 4
+    per bucket."""
+    if n_slots & (n_slots - 1):
+        raise ValueError(f"n_slots must be a power of two, got {n_slots}")
+    return replace(CUCKOO, n_buckets=n_buckets, hash_col=hash_col, geometry=n_slots)
+
+
 def build_cuckoo(
     seen: DataFrame,
     hash_col: str = "url_hash",
     n_buckets: int = 64,
     n_slots: int = 1 << 12,
 ) -> DataFrame:
-    """One cuckoo filter per fixed hash bucket. n_slots MUST be a power of
-    two (alt-index involution); capacity ≈ 0.84 · n_slots · 4 per bucket.
-    `n_slots` is the STARTING geometry: any bucket that cannot absorb its
-    hashes doubles and rebuilds until zero evictions (n_evicted is always
-    0 in the output — the eviction-free invariant holds by construction;
-    per-bucket n_slots records the geometry actually used)."""
-    assert n_slots & (n_slots - 1) == 0, "n_slots must be a power of two"
-
-    def make(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        hashes = pdf[hash_col].to_numpy()
-        table, slots_used = _build_table_autosized(hashes, n_slots)
-        return pd.DataFrame(
-            {
-                "bucket": [int(key[0])],
-                "n_slots": [slots_used],
-                "n_items": [len(hashes)],
-                "n_evicted": [0],
-                "table": [table.tobytes()],
-            }
-        )
-
-    bucketed = seen.select(
-        F.pmod(F.col(hash_col), F.lit(n_buckets)).cast("int").alias("bucket"),
-        F.col(hash_col),
-    )
-    return bucketed.groupBy("bucket").applyInPandas(make, CUCKOO_STATE_SCHEMA)
+    """One cuckoo filter per fixed hash bucket. `n_slots` is the STARTING
+    geometry: any bucket that cannot absorb its hashes doubles and rebuilds
+    until zero evictions."""
+    return cuckoo_filter(n_buckets, n_slots, hash_col).build(seen)
 
 
 def collect_cuckoo(state: DataFrame) -> dict[int, tuple[int, bytes]]:
-    return {
-        int(r["bucket"]): (int(r["n_slots"]), bytes(r["table"]))
-        for r in state.collect()
-    }
+    """Cuckoo state DataFrame → driver dict {bucket: (n_slots, table)}."""
+    return CUCKOO.collect(state)
 
 
 def cuckoo_maybe_seen(
@@ -232,61 +296,9 @@ def cuckoo_maybe_seen(
     hash_col: str = "url_hash",
     n_buckets: int = 64,
 ) -> DataFrame:
-    """Adds `maybe_seen boolean` — same contract as seen.bloom_maybe_seen:
-    False ⇒ definitely unseen, True ⇒ verify exactly. State ships via one
-    broadcast; the probe checks both candidate buckets of each fingerprint
-    in vectorized numpy.
-
-    The no-false-negative guarantee holds iff `n_evicted == 0` everywhere
-    (an over-capacity drop makes its item probe False). The invariant is
-    enforced twice: build_cuckoo/fresh-bucket inserts autosize until zero
-    evictions, and CrawlEngine.run_round checks sum(n_evicted) after every
-    incremental insert and rebuilds the filter from the authoritative seen
-    table at doubled geometry when any bucket overflowed (the count is
-    surfaced in round metrics as `cuckoo_evicted`/`cuckoo_rebuilt`).
-    Deletions intentionally create false negatives (that IS un-seeing)."""
-    from pyspark.broadcast import Broadcast
-
-    if isinstance(state, DataFrame):
-        bc = candidates.sparkSession.sparkContext.broadcast(collect_cuckoo(state))
-    elif isinstance(state, Broadcast):
-        bc = state
-    else:
-        bc = candidates.sparkSession.sparkContext.broadcast(dict(state))
-
-    out_schema = T.StructType(
-        candidates.schema.fields + [T.StructField("maybe_seen", T.BooleanType(), False)]
-    )
-
-    def probe(it):
-        st = bc.value
-        for pdf in it:
-            res = pdf.copy()
-            maybe = np.zeros(len(pdf), dtype=bool)
-            if len(pdf) and st:
-                hashes = pdf[hash_col].to_numpy(dtype=np.int64)
-                buckets = hashes % n_buckets
-                for b in np.unique(buckets):
-                    entry = st.get(int(b))
-                    if entry is None:
-                        continue
-                    n_slots, blob = entry
-                    table = np.frombuffer(blob, dtype=np.uint8).reshape(
-                        n_slots, SLOTS_PER_BUCKET
-                    )
-                    idx = np.nonzero(buckets == b)[0]
-                    h = hashes[idx]
-                    fp = _fingerprints(h)
-                    i1 = _index1(h, n_slots)
-                    i2 = _alt_index(i1, fp, n_slots)
-                    hit = (table[i1] == fp[:, None]).any(axis=1) | (
-                        table[i2] == fp[:, None]
-                    ).any(axis=1)
-                    maybe[idx] = hit
-            res["maybe_seen"] = maybe
-            yield res
-
-    return candidates.mapInPandas(probe, out_schema)
+    """`SeenFilter.maybe_seen` for a cuckoo state (DataFrame, dict from
+    `collect_cuckoo`, or a Broadcast of one)."""
+    return cuckoo_filter(n_buckets, hash_col=hash_col).maybe_seen(candidates, state)
 
 
 def insert_into_cuckoo(
@@ -296,49 +308,12 @@ def insert_into_cuckoo(
     n_buckets: int = 64,
     n_slots: int = 1 << 12,
 ) -> DataFrame:
-    """Incremental maintenance (the cuckoo analog of seen.merge_bloom):
-    insert the round's NEW url hashes into the stored per-bucket tables —
-    O(new URLs + table bytes) per round. Buckets with no prior state get a
-    fresh autosized table (zero evictions by construction). Existing
-    buckets CANNOT resize locally (the full hash set isn't in hand), so an
-    over-capacity insert surfaces as n_evicted > 0 in the state row — the
-    caller MUST check it and rebuild from the authoritative seen table
-    (CrawlEngine does, at doubled geometry). New hashes are sorted before
-    insertion so the resulting bytes stay deterministic at any
-    partitioning."""
-    add = additions.select(
-        F.pmod(F.col(hash_col), F.lit(n_buckets)).cast("int").alias("bucket"),
-        F.col(hash_col).alias("__h"),
-    )
-
-    def apply_inserts(key: tuple, srow: pd.DataFrame, apdf: pd.DataFrame) -> pd.DataFrame:
-        hs = apdf["__h"].to_numpy() if len(apdf) else np.array([], dtype=np.int64)
-        if srow.empty:
-            table, slots_used = _build_table_autosized(hs, n_slots)
-            return pd.DataFrame(
-                {"bucket": [int(key[0])], "n_slots": [slots_used],
-                 "n_items": [len(hs)], "n_evicted": [0],
-                 "table": [table.tobytes()]}
-            )
-        slots = int(srow["n_slots"].iloc[0])
-        table = np.frombuffer(srow["table"].iloc[0], dtype=np.uint8).reshape(
-            slots, SLOTS_PER_BUCKET
-        ).copy()
-        evicted = int(srow["n_evicted"].iloc[0])
-        if len(hs):
-            table, ev2 = _insert_all(table, np.sort(hs), slots)
-            evicted += ev2
-        return pd.DataFrame(
-            {"bucket": [int(key[0])], "n_slots": [slots],
-             "n_items": [int(srow["n_items"].iloc[0]) + len(hs)],
-             "n_evicted": [evicted], "table": [table.tobytes()]}
-        )
-
-    return (
-        state.groupBy("bucket")
-        .cogroup(add.groupBy("bucket"))
-        .applyInPandas(apply_inserts, CUCKOO_STATE_SCHEMA)
-    )
+    """Incremental maintenance: insert new url hashes into the stored
+    per-bucket tables — O(new URLs + table bytes). Buckets with no prior
+    state get a fresh table autosized from `n_slots`; an over-capacity
+    insert into a stored bucket shows as n_evicted > 0, and the caller
+    MUST rebuild from the authoritative seen table (CrawlEngine does)."""
+    return cuckoo_filter(n_buckets, n_slots, hash_col).add(state, additions)
 
 
 def delete_from_cuckoo(
@@ -347,9 +322,7 @@ def delete_from_cuckoo(
     hash_col: str = "url_hash",
     n_buckets: int = 64,
 ) -> DataFrame:
-    """Remove fingerprints (the operation Bloom cannot do): per bucket,
-    clear ONE matching slot per removed hash across its two candidate
-    buckets. Distributed per-bucket applyInPandas over state ∪ removals.
+    """Remove fingerprints (the operation Bloom cannot do), per bucket.
 
     PRECONDITION (standard cuckoo-filter deletion contract): every removed
     hash MUST have been inserted and not already removed. Deleting an
@@ -358,49 +331,4 @@ def delete_from_cuckoo(
     still-seen URL. Callers should anti-join removals against the seen
     table first (the crawl engine only ever deletes hashes it committed);
     tests/test_cuckoo.py pins the collision case."""
-    rem = removals.select(
-        F.pmod(F.col(hash_col), F.lit(n_buckets)).cast("int").alias("bucket"),
-        F.col(hash_col).alias("__h"),
-    )
-
-    def apply_removals(key: tuple, srow: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if srow.empty:  # removals for a bucket with no filter: nothing to do
-            return pd.DataFrame(
-                {"bucket": pd.array([], dtype="int32"),
-                 "n_slots": pd.array([], dtype="int64"),
-                 "n_items": pd.array([], dtype="int64"),
-                 "n_evicted": pd.array([], dtype="int64"),
-                 "table": pd.array([], dtype=object)}
-            )
-        n_slots = int(srow["n_slots"].iloc[0])
-        table = np.frombuffer(srow["table"].iloc[0], dtype=np.uint8).reshape(
-            n_slots, SLOTS_PER_BUCKET
-        ).copy()
-        removed = 0
-        hs = rpdf["__h"].to_numpy() if len(rpdf) else np.array([], dtype=np.int64)
-        if len(hs):
-            fps = _fingerprints(hs)
-            i1s = _index1(hs, n_slots)
-            i2s = _alt_index(i1s, fps, n_slots)
-            for fp, i1, i2 in zip(fps, i1s, i2s):
-                for idx in (int(i1), int(i2)):
-                    slots = np.nonzero(table[idx] == fp)[0]
-                    if len(slots):
-                        table[idx, slots[0]] = 0
-                        removed += 1
-                        break
-        return pd.DataFrame(
-            {
-                "bucket": [int(key[0])],
-                "n_slots": [n_slots],
-                "n_items": [int(srow["n_items"].iloc[0]) - removed],
-                "n_evicted": [int(srow["n_evicted"].iloc[0])],
-                "table": [table.tobytes()],
-            }
-        )
-
-    return (
-        state.groupBy("bucket")
-        .cogroup(rem.groupBy("bucket"))
-        .applyInPandas(apply_removals, CUCKOO_STATE_SCHEMA)
-    )
+    return cuckoo_filter(n_buckets, hash_col=hash_col).update(state, removals, _delete)

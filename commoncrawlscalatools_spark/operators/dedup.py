@@ -36,20 +36,10 @@ from commoncrawlscalatools_spark.functions.text import (
     ngram_shingles,
     ws_tokens,
 )
+from commoncrawlscalatools_spark.spread import spread
 
 P31 = (1 << 31) - 1
 NUM_PERM = 64  # reference: 64 hash tables, createCorpus.scala:376
-
-
-def _spread(df: DataFrame, key: str) -> DataFrame:
-    """Hash-repartition to the session's default parallelism when the input
-    has fewer partitions — heavy per-row expressions (md5 shingles, 64-perm
-    signatures, bit votes) must not serialize onto one task just because the
-    source was one small file. No-op partition-count-wise at real scale."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target, key)
-    return df
 
 
 def perm_params(i: int) -> tuple[int, int]:
@@ -84,7 +74,7 @@ def with_shingles(
          candidate join, verify) reuses it. At cluster scale this is a
          written intermediate table.
     """
-    base = _spread(df.select(id_col, text_col), id_col)
+    base = spread(df.select(id_col, text_col), id_col)
     toks = base.select(F.col(id_col), ws_tokens(F.col(text_col)).alias("__toks")).persist()
     tcol = F.col("__toks")
     # sequence(1, 0) is DESCENDING in Spark → guard short docs explicitly
@@ -249,7 +239,7 @@ def jaccard_pairs(
     # persist the shingle projection: it feeds the df-cap aggregate + both
     # sides of the pair expansion, and upstream shingling is the expensive
     # part (would be recomputed 3×)
-    base = _spread(df.select(
+    base = spread(df.select(
         F.col(id_col), F.array_distinct(F.col(shingle_col)).alias("__sh")
     ), id_col).persist()
     # r7 shape — three structural changes, each measured on a 127M-pair
@@ -383,7 +373,7 @@ def _simhash_fingerprints(
     lo_bits = min(bits, 32)
     hi_bits = bits - lo_bits
     toks = F.array_distinct(ws_tokens(F.col(text_col)))
-    hx = _spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
+    hx = spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
         F.col(id_col),
         F.explode_outer(
             F.transform(
@@ -733,7 +723,7 @@ def dup_span_intervals(
 
     toks = ws_tokens(F.col(text_col))
     base = df.select(F.col(id_col), toks.alias("toks")).where(F.size("toks") >= n)
-    grams = _spread(base, id_col).select(
+    grams = spread(base, id_col).select(
         id_col,
         F.posexplode(
             F.transform(
@@ -747,7 +737,7 @@ def dup_span_intervals(
     # the r6 countDistinct(id) expanded into two aggregate exchanges over
     # every (key, id) pair; per-doc distinctness is a per-row property and
     # never needed a shuffle.
-    distinct_keys = _spread(base, id_col).select(
+    distinct_keys = spread(base, id_col).select(
         F.explode(
             F.array_distinct(
                 F.transform(
@@ -863,7 +853,7 @@ def _gram_keys(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
     the wire, no raw-text shuffle)."""
     toks = ws_tokens(F.col(text_col))
     base = df.select(F.col(id_col), toks.alias("toks")).where(F.size("toks") >= n)
-    return _spread(base, id_col).select(
+    return spread(base, id_col).select(
         id_col,
         F.explode(
             F.array_distinct(
@@ -952,7 +942,7 @@ def dedup_lines(
     # unmaterialized lines expression would be re-evaluated once per line
     # per doc (O(lines²·split) per row, the dominant cost of the r5/r6
     # shape).
-    base = _spread(
+    base = spread(
         df.select(F.col(id_col), lines_col.alias("__lines")), id_col
     ).persist()
     lines_col = F.col("__lines")

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from commoncrawlscalatools_spark.functions.text import ws_tokens
-from commoncrawlscalatools_spark.operators.dedup import _spread
+from commoncrawlscalatools_spark.spread import spread
 
 
 def doc_bigrams(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -47,7 +47,7 @@ def doc_bigrams(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
         ),
     )
     return (
-        _spread(base, id_col)
+        spread(base, id_col)
         .select(id_col, F.explode(pairs).alias("p"))
         .select(id_col, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
     )
@@ -68,7 +68,7 @@ def train_bigram_lm(
     uni = bi.groupBy("w1").agg(F.sum("c12").alias("c1"))
     toks = ws_tokens(F.col(text_col))
     vocab = (
-        _spread(df.select(id_col, text_col), id_col)
+        spread(df.select(id_col, text_col), id_col)
         .select(F.explode(toks).alias("w"))
         .agg(F.countDistinct("w").cast("long").alias("vocab_size"))
     )

@@ -25,8 +25,12 @@ def relevance_score(text: Column, query_terms: list[str]) -> Column:
     mentions of the query terms per token. Deterministic, monotone in the
     mention count like the reference's Lucene score usage (only the >0.1
     cut and ordering matter there — createCorpus.scala:300-303)."""
-    mentions = mention_count(text, query_terms)
-    ntok = token_count_ws(text)
+    return relevance_from_counts(mention_count(text, query_terms), token_count_ws(text))
+
+
+def relevance_from_counts(mentions: Column, ntok: Column) -> Column:
+    """The relevance formula over precomputed counts: 10 · mentions per
+    token, rounded to 6 places; 0 for a document with no tokens."""
     return F.round(
         F.when(ntok > 0, mentions.cast("double") * 10.0 / ntok.cast("double")).otherwise(
             F.lit(0.0)
@@ -63,13 +67,7 @@ def search_topk(
     )
     scored = parts.select(
         F.col(id_col),
-        F.round(
-            F.when(
-                F.col("__n") > 0,
-                F.col("__m").cast("double") * 10.0 / F.col("__n").cast("double"),
-            ).otherwise(F.lit(0.0)),
-            6,
-        ).alias("relevance"),
+        relevance_from_counts(F.col("__m"), F.col("__n")).alias("relevance"),
     )
     return (
         scored.orderBy(F.desc("relevance"), F.col(id_col))

@@ -7,10 +7,11 @@ snapshot tables:
   round r:
     frontier(pending) ──schedule──▶ scheduled (politeness + priority + budget)
     scheduled ──fetch+extract──▶ documents (spans) + outlinks
-    outlinks ──canonicalize──▶ robots filter ──▶ Bloom+exact URL-seen ──▶
+    outlinks ──canonicalize──▶ robots filter ──▶ pre-filter+exact URL-seen ──▶
         new pending frontier rows
-    commit snapshots: documents, lineage, seen, host_state, bloom, metrics,
-        and LAST the frontier — the round marker.
+    commit snapshots: documents, lineage, seen, host_state, the seen
+        filter's state (bloom / cuckoo), metrics, and LAST the frontier —
+        the round marker.
 
 Atomicity (round-commit protocol): `latest_round` resumes from the
 frontier table, and the frontier MANIFEST PUBLISH is the round's commit
@@ -26,13 +27,13 @@ work reclaim.
 
 Per-round cost discipline (raw scaling efficiency):
   * ONE pass over each expensive intermediate: `scheduled`,
-    the Bloom-probe output and `new_frontier_rows` are persisted;
+    the filter-probe output and `new_frontier_rows` are persisted;
     row counts come from `Observation` metrics attached to the plans of
     the commit writes — zero extra counting actions.
-  * The Bloom filter is INCREMENTAL state: round r builds a delta filter
-    from the round's new URLs only and ORs it into the stored per-bucket
-    bytes (`seen.merge_bloom`) — O(new URLs + filter bytes) per round,
-    never O(|seen|).
+  * The URL-seen pre-filter (operators/seen.py `SeenFilter`; the engine
+    never sees its flavor) is INCREMENTAL state: round r adds only the
+    round's new URLs to the stored per-bucket rows (`SeenFilter.add`) —
+    O(new URLs + filter bytes) per round, never O(|seen|).
   * The probe ships filter bytes via one sc.broadcast (torrent on a real
     cluster), never as a join column.
   * Synthetic fetch failures (deterministic, md5-keyed on url+round) drive
@@ -57,7 +58,6 @@ commit) is amortized by round size — see bench/scaling.py.
 from __future__ import annotations
 
 import atexit
-import math
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
@@ -90,18 +90,17 @@ class CrawlConfig:
     per_host_cap: int = 10
     budget: int | None = None
     n_hosts: int = 1000
-    bloom_buckets: int = 64
-    bloom_bits: int = 1 << 19  # fixed per-bucket geometry ⇒ mergeable deltas
-    use_bloom: bool = True  # deprecated alias: False ⇒ seen_filter="none"
-    # URL-seen pre-filter flavor (north rule: "Bloom/cuckoo"):
-    #   "bloom"  — OR-mergeable bit array (default)
+    # URL-seen pre-filter (north rule: "Bloom/cuckoo"), seen.seen_filter:
+    #   "bloom"  — OR-able bit arrays (default)
     #   "cuckoo" — (2,4)-cuckoo tables; lower FP at same bits, deletable
     #   "none"   — exact anti-join only
     seen_filter: str = "bloom"
+    # fixed hash bucketing of either flavor's state (not just Bloom's)
+    bloom_buckets: int = 64
+    # starting per-bucket geometry of a fresh build, per flavor; a
+    # health-triggered rebuild grows it and later rounds keep the stored one
+    bloom_bits: int = 1 << 19
     cuckoo_slots: int = 1 << 12
-    # saturation threshold: rebuild the Bloom filter at doubled geometry
-    # when any bucket's n_items * bits_per_item outgrows its n_bits
-    bloom_bits_per_item: int = 10
     shuffle_partitions: int | None = None
     doc_coalesce: int | None = None  # coalesce docs before write (small rounds)
     # W6 slow-kill (reference: ParserTooSlowException + min-throughput kill,
@@ -149,41 +148,22 @@ class CrawlEngine:
         self.spark = spark
         self.store = SnapshotStore(spark, store_root)
         self.config = config or CrawlConfig()
+        cfg = self.config
+        self.seen_filter = SN.seen_filter(
+            cfg.seen_filter, cfg.bloom_buckets, cfg.bloom_bits, cfg.cuckoo_slots
+        )
 
     # -- bootstrap -------------------------------------------------------
 
     def bootstrap(self, seeds: DataFrame, robots: DataFrame) -> None:
         """Round 0 state: canonicalized deduped seeds as pending frontier."""
-        cfg = self.config
         cand = FR.canonicalize_seeds(seeds)
         frontier0 = FR.as_frontier_rows(cand, round_no=0)
         seen0 = frontier0.select("url_hash", F.lit(0).cast("int").alias("round_added"))
         self.store.write("seen", seen0, 0, append=True)
-        filt = self._filter_kind()
-        if filt == "bloom":
-            self.store.write(
-                "bloom",
-                SN.build_bloom(
-                    self.store.read("seen", 0),
-                    n_buckets=cfg.bloom_buckets,
-                    n_bits=cfg.bloom_bits,
-                ),
-                0,
-                coalesce=4,
-            )
-        elif filt == "cuckoo":
-            from commoncrawlscalatools_spark.operators import cuckoo as CK
-
-            self.store.write(
-                "cuckoo",
-                CK.build_cuckoo(
-                    self.store.read("seen", 0),
-                    n_buckets=cfg.bloom_buckets,
-                    n_slots=cfg.cuckoo_slots,
-                ),
-                0,
-                coalesce=4,
-            )
+        flt = self.seen_filter
+        if flt is not None:
+            self.store.write(flt.table, flt.build(self.store.read("seen", 0)), 0, coalesce=4)
         self.store.write(
             "host_state",
             frontier0.select("host").distinct().withColumn(
@@ -220,11 +200,6 @@ class CrawlEngine:
             self.store.read("frontier_log", v)
         )
 
-    def _filter_kind(self) -> str:
-        if not self.config.use_bloom:
-            return "none"
-        return self.config.seen_filter
-
     def latest_round(self) -> int:
         v = self.store.latest_version("frontier")
         return v if v is not None else -1
@@ -242,23 +217,12 @@ class CrawlEngine:
         # sc.broadcast of the previous round's filter bytes only needs
         # round r-1 state, so it overlaps the whole fetch phase instead of
         # sitting on the serial path between docs and the feedback chain.
-        filt = self._filter_kind()
-        bloom_prev = None
-        cuckoo_prev = None
-        bloom_fut = None
-        if filt == "bloom":
-            bloom_prev = self.store.read("bloom", round_no - 1)
-            _bp = bloom_prev
-            bloom_fut = _COMMIT_POOL.submit(
-                lambda: self.spark.sparkContext.broadcast(SN.collect_bloom(_bp))
-            )
-        elif filt == "cuckoo":
-            from commoncrawlscalatools_spark.operators import cuckoo as CK
-
-            cuckoo_prev = self.store.read("cuckoo", round_no - 1)
-            _cp = cuckoo_prev
-            bloom_fut = _COMMIT_POOL.submit(
-                lambda: self.spark.sparkContext.broadcast(CK.collect_cuckoo(_cp))
+        flt = self.seen_filter
+        filter_prev = filter_fut = None
+        if flt is not None:
+            filter_prev = self.store.read(flt.table, round_no - 1)
+            filter_fut = _COMMIT_POOL.submit(
+                lambda: self.spark.sparkContext.broadcast(flt.collect(filter_prev))
             )
 
         scheduled = FR.schedule_round(
@@ -435,18 +399,12 @@ class CrawlEngine:
         outlinks = docs.select(F.explode("outlinks").alias("url"))
         cand = FR.canonicalize_seeds(outlinks.withColumn("priority", F.lit(0.5)))
         cand = RB.apply_robots(cand, robots)
-        bloom_bc = None
-        maybe_seen_fn = None
-        if bloom_fut is not None:
-            bloom_bc = bloom_fut.result()
-        if filt == "cuckoo":
-            from commoncrawlscalatools_spark.operators import cuckoo as CK
-
-            ck_bc, n_b = bloom_bc, cfg.bloom_buckets
-            maybe_seen_fn = lambda c: CK.cuckoo_maybe_seen(c, ck_bc, n_buckets=n_b)  # noqa: E731
+        filter_bc = maybe_seen_fn = None
+        if filter_fut is not None:
+            filter_bc = filter_fut.result()
+            maybe_seen_fn = lambda c: flt.maybe_seen(c, filter_bc)  # noqa: E731
         new_urls, flagged_cache = SN.filter_unseen_flagged(
-            cand, seen, bloom_state=bloom_bc if filt == "bloom" else None,
-            n_buckets=cfg.bloom_buckets, maybe_seen_fn=maybe_seen_fn,
+            cand, seen, maybe_seen_fn=maybe_seen_fn
         )
         new_frontier_rows = FR.as_frontier_rows(new_urls, round_no).persist()
 
@@ -469,104 +427,31 @@ class CrawlEngine:
         )
         t_seen = time.time()
 
-        # incremental filter maintenance: delta over THIS round's new URLs
-        # only — per-round cost independent of |seen|. Both filter kinds
-        # carry a post-write health check against their state rows
-        # (n_buckets tiny rows) that rebuilds from the authoritative seen
-        # table at doubled geometry when the filter outgrows itself:
-        # Bloom saturation only degrades FP rate (pre-filter selectivity),
-        # but a cuckoo eviction is a FALSE NEGATIVE — a seen URL would skip
-        # the exact anti-join — so that check is a correctness guard.
-        # The whole chain runs as a pool future: its inputs (the
-        # new_frontier_rows cache and the committed seen table) are final
-        # once the seen delta lands, so it can overlap the frontier
-        # transition build and the metrics commit; the barrier below holds
-        # the marker until it lands.
+        # incremental filter maintenance over THIS round's new URLs only —
+        # per-round cost independent of |seen| — then a health check on
+        # the n_buckets state rows that rebuilds from the authoritative
+        # seen table when the filter outgrows itself (seen.py documents
+        # what each flavor counts as unhealthy). It runs in the seen
+        # delta's pool task, after the write a rebuild reads, so it can
+        # overlap the frontier transition build and the metrics commit;
+        # the barrier below holds the marker until it lands.
         maint = {"evicted": 0, "rebuilt": False}
-
-        def _filter_maintenance():
-            if filt == "bloom":
-                # geometry follows the STORED state (fixed across deltas;
-                # a saturation rebuild doubles it and later rounds inherit)
-                cur_bits = max(
-                    (g[0] for g in bloom_bc.value.values()), default=cfg.bloom_bits
-                )
-                delta = SN.build_bloom(
-                    new_frontier_rows.select("url_hash"),
-                    n_buckets=cfg.bloom_buckets,
-                    n_bits=cur_bits,
-                )
-                self.store.write(
-                    "bloom", SN.merge_bloom(bloom_prev, delta), round_no, coalesce=4
-                )
-                bstate = (
-                    self.store.read("bloom", round_no)
-                    .select("n_bits", "n_items")
-                    .collect()
-                )
-                if any(
-                    r["n_items"] * cfg.bloom_bits_per_item > r["n_bits"] for r in bstate
-                ):
-                    # size the new fixed geometry for the CURRENT worst
-                    # bucket (next power of two ≥ items·bits_per_item), so
-                    # one rebuild restores the target FP rate rather than
-                    # one doubling per round chasing a growing seen set
-                    worst = max(r["n_items"] for r in bstate)
-                    new_bits = max(
-                        cur_bits * 2,
-                        1
-                        << math.ceil(
-                            math.log2(max(1, worst * cfg.bloom_bits_per_item))
-                        ),
-                    )
-                    self.store.write(
-                        "bloom",
-                        SN.build_bloom(
-                            self.store.read("seen", round_no),
-                            n_buckets=cfg.bloom_buckets,
-                            n_bits=new_bits,
-                        ),
-                        round_no,
-                        coalesce=4,
-                    )
-                    maint["rebuilt"] = True
-            elif filt == "cuckoo":
-                from commoncrawlscalatools_spark.operators import cuckoo as CK
-
-                self.store.write(
-                    "cuckoo",
-                    CK.insert_into_cuckoo(
-                        cuckoo_prev,
-                        new_frontier_rows.select("url_hash"),
-                        n_buckets=cfg.bloom_buckets,
-                        n_slots=cfg.cuckoo_slots,
-                    ),
-                    round_no,
-                    coalesce=4,
-                )
-                ckstate = (
-                    self.store.read("cuckoo", round_no)
-                    .select("n_slots", "n_evicted")
-                    .collect()
-                )
-                maint["evicted"] = sum(int(r["n_evicted"]) for r in ckstate)
-                if maint["evicted"] > 0:
-                    self.store.write(
-                        "cuckoo",
-                        CK.build_cuckoo(
-                            self.store.read("seen", round_no),
-                            n_buckets=cfg.bloom_buckets,
-                            n_slots=max(int(r["n_slots"]) for r in ckstate) * 2,
-                        ),
-                        round_no,
-                        coalesce=4,
-                    )
-                    maint["rebuilt"] = True
 
         def _seen_then_maintenance():
             self.store.write("seen", seen_delta, round_no, append=True)
-            if filt != "none":
-                _filter_maintenance()
+            if flt is None:
+                return
+            state = flt.add(filter_prev, new_frontier_rows.select("url_hash"))
+            self.store.write(flt.table, state, round_no, coalesce=4)
+            maint["evicted"], rebuild = flt.health(self.store.read(flt.table, round_no))
+            if rebuild is not None:
+                self.store.write(
+                    flt.table,
+                    flt.build(self.store.read("seen", round_no), rebuild),
+                    round_no,
+                    coalesce=4,
+                )
+                maint["rebuilt"] = True
 
         side_commits.append(_COMMIT_POOL.submit(_seen_then_maintenance))
 
@@ -728,8 +613,8 @@ class CrawlEngine:
         new_frontier_rows.unpersist()
         if flagged_cache is not None:
             flagged_cache.unpersist()
-        if bloom_bc is not None:
-            bloom_bc.unpersist()
+        if filter_bc is not None:
+            filter_bc.unpersist()
         return metrics
 
     # -- loop with resume --------------------------------------------------

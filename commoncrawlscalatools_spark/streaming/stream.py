@@ -109,7 +109,7 @@ def sessionize_stateful_streaming(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    gap_s = gap_minutes * 60
+    gap_us = gap_minutes * 60 * 1_000_000
     schema = spark.read.parquet(events_dir).schema
 
     def fn(key, pdfs, state):
@@ -120,12 +120,16 @@ def sessionize_stateful_streaming(
         else:
             last_ts, sid, n, start_ts, sv = None, 0, 0, None, 0.0
         out = []
-        epochs = (rows["ts"].astype("int64") // 1_000_000_000).tolist()
+        # state times are epoch microseconds: truncating to whole seconds
+        # would merge a 1800.4 s gap into one 30-minute session; the output
+        # epochs are whole seconds
+        micros = rows["ts"].to_numpy("datetime64[us]").astype("int64").tolist()
         values = rows["value"].tolist()
-        for t, v in zip(epochs, values):
-            if last_ts is None or t - last_ts > gap_s:
+        for t, v in zip(micros, values):
+            if last_ts is None or t - last_ts > gap_us:
                 if n > 0:
-                    out.append((user_id, sid, n, start_ts, last_ts, sv, False))
+                    out.append((user_id, sid, n, start_ts // 1_000_000,
+                                last_ts // 1_000_000, sv, False))
                 sid += 1
                 n, start_ts, sv = 0, t, 0.0
             n += 1
@@ -133,7 +137,8 @@ def sessionize_stateful_streaming(
             last_ts = t
         state.update((last_ts, sid, n, start_ts, sv))
         if n > 0:  # snapshot of the open session
-            out.append((user_id, sid, n, start_ts, last_ts, sv, True))
+            out.append((user_id, sid, n, start_ts // 1_000_000,
+                        last_ts // 1_000_000, sv, True))
         yield pd.DataFrame(
             out,
             columns=[
@@ -167,9 +172,11 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     the previous event exceeds `gap_minutes`; session_id = cumulative count
     of session starts (lag + running sum — one shuffle on user_id)."""
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    epoch = F.col("ts").cast("timestamp").cast("long")  # NTZ-safe (UTC session)
-    gap = epoch - F.lag(epoch).over(w)
-    is_start = F.when(gap.isNull() | (gap > gap_minutes * 60), 1).otherwise(0)
+    # microseconds, not whole seconds: a 1800.4 s gap must open a new
+    # 30-minute session (NTZ-safe cast, UTC session)
+    micros = F.unix_micros(F.col("ts").cast("timestamp"))
+    gap = micros - F.lag(micros).over(w)
+    is_start = F.when(gap.isNull() | (gap > gap_minutes * 60 * 1_000_000), 1).otherwise(0)
     with_start = events.withColumn("is_start", is_start)
     sess = F.sum("is_start").over(
         w.rowsBetween(W.unboundedPreceding, W.currentRow)

@@ -81,7 +81,7 @@ def store_root(tmp_path):
 def test_crawl_rounds_and_resume(spark, store_root):
     seeds = generate_seeds(spark, 300, seed=11, n_hosts=20)
     robots = generate_robots(spark, 20, seed=11)
-    cfg = CrawlConfig(per_host_cap=5, n_hosts=20, use_bloom=True, bloom_buckets=8, doc_coalesce=2)
+    cfg = CrawlConfig(per_host_cap=5, n_hosts=20, bloom_buckets=8, doc_coalesce=2)
     eng = CrawlEngine(spark, store_root, cfg)
     eng.bootstrap(seeds, robots)
     m1 = eng.run(2)
@@ -109,33 +109,74 @@ def test_crawl_rounds_and_resume(spark, store_root):
     assert lineage.count() > 0
 
 
-def test_incremental_bloom_tracks_seen_exactly(spark, store_root):
-    """The per-round Bloom delta is built from the round's NEW urls only and
-    OR-merged into stored bytes: n_items across buckets must equal |seen|
-    after every round (i.e. delta input rows == that round's new URLs), and
-    the merged filter must have zero false negatives over the seen set."""
-    from commoncrawlscalatools_spark.operators.seen import bloom_maybe_seen, collect_bloom
+def _state_md5(state) -> str:
+    """md5 over a filter state table's rows in bucket order, every column
+    (geometry, counts and the filter bytes)."""
+    import hashlib
 
+    h = hashlib.md5()
+    for row in sorted(state.collect(), key=lambda r: r["bucket"]):
+        for v in row:
+            h.update(bytes(v) if isinstance(v, (bytes, bytearray)) else str(v).encode())
+            h.update(b"|")
+    return h.hexdigest()
+
+
+# Per-flavor starting geometry, sized so no health rebuild fires, and the
+# md5 of the stored state after each round (0 = bootstrap). The digests
+# were recorded from the maintenance that preceded the shared SeenFilter
+# path (Bloom: build a delta filter, OR-merge it; cuckoo:
+# insert_into_cuckoo); the state bytes must not change, not only the
+# membership answers.
+INCREMENTAL_CASES = {
+    "bloom": ({"bloom_bits": 1 << 15}, [
+        "a6b3be2337e43ce6f437759dc3144ceb",
+        "5ed0d2e684e5ed027cb681eac9295e0f",
+        "62dd1884bfa85c211aae685e37c87f73",
+        "5e1a2cf9e973c8003ee721bb7962d78a",
+    ]),
+    "cuckoo": ({"cuckoo_slots": 1 << 9}, [
+        "e763b95b27775204066e616308419dca",
+        "52c0fdf74a77c1acd7bb04c20438e0e9",
+        "414b90ec32a92ab420f2be11bca84c0e",
+        "10dcf8b2b8c73e37a1e532526d7bf3ba",
+    ]),
+}
+
+
+@pytest.mark.parametrize("flavor", ["bloom", "cuckoo"])
+def test_incremental_filter_tracks_seen_exactly(spark, store_root, flavor):
+    """Each round adds only its NEW urls to the stored per-bucket filter
+    rows: n_items across buckets must equal |seen| after every round (i.e.
+    the round's additions == its new URLs), the seen table must equal the
+    frontier's url hashes, the filter must have zero false negatives over
+    the seen set, and the stored state bytes are pinned per round."""
+    geometry, pinned_md5 = INCREMENTAL_CASES[flavor]
     seeds = generate_seeds(spark, 250, seed=7, n_hosts=15)
     robots = generate_robots(spark, 15, seed=7)
-    cfg = CrawlConfig(per_host_cap=5, n_hosts=15, use_bloom=True, bloom_buckets=8,
-                      bloom_bits=1 << 15, doc_coalesce=2)
+    cfg = CrawlConfig(per_host_cap=5, n_hosts=15, seen_filter=flavor, bloom_buckets=8,
+                      doc_coalesce=2, **geometry)
     eng = CrawlEngine(spark, store_root, cfg)
     eng.bootstrap(seeds, robots)
     metrics = eng.run(3)
+    assert [m["round"] for m in metrics] == [1, 2, 3]
+    assert not any(m["seen_filter_rebuilt"] for m in metrics)
+    assert [_state_md5(eng.store.read(flavor, r)) for r in range(4)] == pinned_md5
     prev_items = None
     for r in range(0, 4):
-        bloom = eng.store.read("bloom", r)
-        n_items = sum(row["n_items"] for row in bloom.select("n_items").collect())
+        state = eng.store.read(flavor, r)
+        n_items = sum(row["n_items"] for row in state.select("n_items").collect())
         n_seen = eng.store.read("seen", r).count()
-        assert n_items == n_seen, f"round {r}: bloom item count != |seen|"
+        assert n_items == n_seen, f"round {r}: filter item count != |seen|"
         if r >= 1:
             assert n_items - prev_items == metrics[r - 1]["new_urls"]
         prev_items = n_items
+    seen = eng.store.read("seen", 3).select("url_hash")
+    fr = {x[0] for x in eng.read_frontier(3).select("url_hash").collect()}
+    assert {x[0] for x in seen.collect()} == fr
     # zero false negatives: every seen url_hash must probe maybe_seen=true
-    seen = eng.store.read("seen", 3)
-    state = collect_bloom(eng.store.read("bloom", 3))
-    flagged = bloom_maybe_seen(seen, state, n_buckets=8)
+    state = eng.seen_filter.collect(eng.store.read(flavor, 3))
+    flagged = eng.seen_filter.maybe_seen(seen, state)
     assert flagged.filter(~F.col("maybe_seen")).count() == 0
 
 
@@ -160,8 +201,7 @@ def test_kill_between_commits_rerolls_round_identically(spark, store_root):
     uninterrupted run (frontier-last commit protocol)."""
     seeds = generate_seeds(spark, 200, seed=13, n_hosts=12)
     robots = generate_robots(spark, 12, seed=13)
-    cfg = CrawlConfig(per_host_cap=4, n_hosts=12, use_bloom=True, bloom_buckets=8,
-                      doc_coalesce=2)
+    cfg = CrawlConfig(per_host_cap=4, n_hosts=12, bloom_buckets=8, doc_coalesce=2)
     eng = CrawlEngine(spark, store_root, cfg)
     eng.bootstrap(seeds, robots)
     eng.run(1)
@@ -192,7 +232,7 @@ def test_retry_backoff_and_give_up(spark, store_root):
 
     seeds = generate_seeds(spark, 300, seed=5, n_hosts=10)
     robots = generate_robots(spark, 10, seed=5)
-    cfg = CrawlConfig(per_host_cap=30, n_hosts=10, use_bloom=False,
+    cfg = CrawlConfig(per_host_cap=30, n_hosts=10, seen_filter="none",
                       fail_permille=400, max_retries=1, doc_coalesce=2)
     eng = CrawlEngine(spark, store_root, cfg)
     eng.bootstrap(seeds, robots)
@@ -236,7 +276,10 @@ def test_bloom_saturation_rebuild_recovers_fp_rate(spark, store_root):
     engine must detect n_items·bits_per_item > n_bits after the merge and
     rebuild at a geometry sized for the worst bucket, recovering the FP
     rate (measured as the maybe_seen fraction of never-seen probe URLs)."""
-    from commoncrawlscalatools_spark.operators.seen import bloom_maybe_seen
+    from commoncrawlscalatools_spark.operators.seen import (
+        BLOOM_BITS_PER_ITEM,
+        bloom_maybe_seen,
+    )
 
     cfg = CrawlConfig(per_host_cap=20, n_hosts=15, seen_filter="bloom",
                       bloom_buckets=2, bloom_bits=1 << 7, doc_coalesce=2)
@@ -261,7 +304,7 @@ def test_bloom_saturation_rebuild_recovers_fp_rate(spark, store_root):
     assert fp_after < 0.1, f"rebuild must recover the FP rate ({fp_after})"
     rows = eng.store.read("bloom", last).select("n_bits", "n_items").collect()
     assert all(
-        r["n_items"] * cfg.bloom_bits_per_item <= r["n_bits"] for r in rows
+        r["n_items"] * BLOOM_BITS_PER_ITEM <= r["n_bits"] for r in rows
     ), "committed geometry must satisfy the health invariant"
 
 
@@ -273,7 +316,7 @@ def test_engine_compaction_bounds_paths_and_resumes(spark, store_root):
     compacted state and keeps the URL-seen invariant."""
     seeds = generate_seeds(spark, 250, seed=17, n_hosts=15)
     robots = generate_robots(spark, 15, seed=17)
-    cfg = CrawlConfig(per_host_cap=4, n_hosts=15, use_bloom=True, bloom_buckets=8,
+    cfg = CrawlConfig(per_host_cap=4, n_hosts=15, bloom_buckets=8,
                       doc_coalesce=2, compact_every=2)
     eng = CrawlEngine(spark, store_root, cfg)
     eng.bootstrap(seeds, robots)
@@ -303,18 +346,50 @@ def test_engine_compaction_bounds_paths_and_resumes(spark, store_root):
     assert flagged.filter(~F.col("maybe_seen")).count() == 0
 
 
-def test_round_metrics_table_is_durable_with_guard_fields(spark, store_root):
-    """VERDICT r3 #2: the persisted metrics table (not just the returned
-    dict) must carry the guard/health fields — a monitoring consumer
-    reading the store sees a forced cuckoo rebuild, the per-phase walls,
-    and the frontier/finished counts."""
-    cfg = CrawlConfig(per_host_cap=20, n_hosts=15, seen_filter="cuckoo",
-                      bloom_buckets=2, cuckoo_slots=1 << 3, doc_coalesce=2)
+# Tiny starting geometry per flavor, the rebuild each round must report,
+# and the pinned per-round state md5 (recorded as for INCREMENTAL_CASES).
+GUARD_CASES = {
+    "bloom": ({"bloom_bits": 1 << 7}, [True, True], [
+        "2d18228a6d6759510c0b986d41d3a633",
+        "e4ede6e57487958adbd6f04e9ffa1ac9",
+        "932e75bd7199d1f6ba8e78b2f0b4c68b",
+    ]),
+    "cuckoo": ({"cuckoo_slots": 1 << 3}, [True, False], [
+        "0c4c7133c16771f22d77ad6183bdb2f0",
+        "fe0591810cd2332d2f7e45181767ada6",
+        "09f6bde121bd99b4d94de046e59293d0",
+    ]),
+}
+
+
+def _check_guard_rebuild_and_metrics_table(spark, store_root, flavor):
+    """A tiny starting geometry overflows within a round: the health guard
+    must rebuild from the seen table (a cuckoo overflow evicts items, a
+    false negative; a Bloom one only saturates), every committed state is
+    healthy with zero false negatives and pinned bytes, and the persisted
+    metrics table (not just the returned dict) carries the guard/health
+    fields — a monitoring consumer reading the store sees the forced
+    rebuild, the per-phase walls, and the frontier/finished counts."""
+    geometry, rebuilt, pinned_md5 = GUARD_CASES[flavor]
+    cfg = CrawlConfig(per_host_cap=20, n_hosts=15, seen_filter=flavor,
+                      bloom_buckets=2, doc_coalesce=2, **geometry)
     eng = CrawlEngine(spark, store_root, cfg)
     eng.bootstrap(generate_seeds(spark, 400, seed=11, n_hosts=15),
                   generate_robots(spark, 15, seed=11))
     metrics = eng.run(2)
-    assert any(m["seen_filter_rebuilt"] for m in metrics)  # guard fired
+    assert [m["seen_filter_rebuilt"] for m in metrics] == rebuilt
+    # only a cuckoo overflow loses items
+    assert any(m["seen_filter_evicted"] > 0 for m in metrics) == (flavor == "cuckoo")
+    assert [_state_md5(eng.store.read(flavor, r)) for r in range(3)] == pinned_md5
+    flt = eng.seen_filter
+    for r in range(0, 3):
+        state = eng.store.read(flavor, r)
+        seen = eng.store.read("seen", r).select("url_hash")
+        if r >= 1:  # bootstrap has no guard; every round's commit does
+            assert flt.health(state) == (0, None), f"round {r}: committed state unhealthy"
+        assert sum(row["n_items"] for row in state.select("n_items").collect()) == seen.count()
+        flagged = flt.maybe_seen(seen, state)
+        assert flagged.filter(~F.col("maybe_seen")).count() == 0
     # read back from the STORE — the process-independent channel. The
     # metrics table is append-mode: one scan returns the full round history.
     history = eng.store.read("metrics")
@@ -333,6 +408,14 @@ def test_round_metrics_table_is_durable_with_guard_fields(spark, store_root):
     assert any(r["seen_filter_rebuilt"] for r in history.collect()), (
         "the rebuild guard event must be visible from the store alone"
     )
+
+
+def test_round_metrics_table_is_durable_with_guard_fields(spark, store_root):
+    _check_guard_rebuild_and_metrics_table(spark, store_root, "cuckoo")
+
+
+def test_bloom_saturation_guard_fields_in_metrics_table(spark, store_root):
+    _check_guard_rebuild_and_metrics_table(spark, store_root, "bloom")
 
 
 def test_typed_failure_class_give_up_rounds(spark):

@@ -185,28 +185,3 @@ def test_cuckoo_delete_absent_hash_collision_clears_other_url(spark):
     assert flagged.filter(~F.col("maybe_seen")).count() == 1, (
         "collision delete must clear h1's copy (the documented hazard)"
     )
-
-
-def test_crawl_engine_with_cuckoo_filter(spark, tmp_path):
-    """Full crawl rounds with seen_filter='cuckoo': same invariants as the
-    Bloom path (seen == frontier hashes, resume, incremental maintenance —
-    n_items grows by exactly the round's new URLs)."""
-    from commoncrawlscalatools_spark.operators.robots import generate_robots
-    from commoncrawlscalatools_spark.plans.crawl import CrawlConfig, CrawlEngine
-    from commoncrawlscalatools_spark.sources.seeds import generate_seeds
-
-    root = str(tmp_path / "ckstate")
-    cfg = CrawlConfig(per_host_cap=5, n_hosts=15, seen_filter="cuckoo",
-                      bloom_buckets=8, cuckoo_slots=1 << 9, doc_coalesce=2)
-    eng = CrawlEngine(spark, root, cfg)
-    eng.bootstrap(generate_seeds(spark, 250, seed=7, n_hosts=15),
-                  generate_robots(spark, 15, seed=7))
-    metrics = eng.run(2)
-    assert [m["round"] for m in metrics] == [1, 2]
-    for r in range(0, 3):
-        ck = eng.store.read("cuckoo", r)
-        n_items = sum(row["n_items"] for row in ck.select("n_items").collect())
-        assert n_items == eng.store.read("seen", r).count()
-    seen = {x[0] for x in eng.store.read("seen", 2).select("url_hash").collect()}
-    fr = {x[0] for x in eng.read_frontier(2).select("url_hash").collect()}
-    assert seen == fr

@@ -275,7 +275,7 @@ def test_engine_commits_filter_stats_tables(spark, tmp_path):
     from commoncrawlscalatools_spark.sources.seeds import generate_seeds
 
     root = str(tmp_path / "fstats")
-    cfg = CrawlConfig(per_host_cap=10, n_hosts=10, use_bloom=False,
+    cfg = CrawlConfig(per_host_cap=10, n_hosts=10, seen_filter="none",
                       collect_filter_stats=True, doc_coalesce=2)
     eng = CrawlEngine(spark, root, cfg)
     eng.bootstrap(generate_seeds(spark, 150, seed=9, n_hosts=10),

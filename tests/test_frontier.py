@@ -11,7 +11,11 @@ from commoncrawlscalatools_spark.operators.frontier import (
     schedule_round,
 )
 from commoncrawlscalatools_spark.operators.robots import apply_robots, generate_robots
-from commoncrawlscalatools_spark.operators.seen import build_bloom, filter_unseen
+from commoncrawlscalatools_spark.operators.seen import (
+    bloom_maybe_seen,
+    build_bloom,
+    filter_unseen,
+)
 from commoncrawlscalatools_spark.sources.seeds import generate_seeds
 
 
@@ -117,7 +121,9 @@ def test_bloom_no_false_negatives_and_exact_equivalence(spark):
     bloom = build_bloom(seen, n_buckets=16)
     with_bloom = sorted(
         r["url_hash"]
-        for r in filter_unseen(cand, seen, bloom_state=bloom, n_buckets=16)
+        for r in filter_unseen(
+            cand, seen, maybe_seen_fn=lambda c: bloom_maybe_seen(c, bloom, n_buckets=16)
+        )
         .select("url_hash")
         .collect()
     )

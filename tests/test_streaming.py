@@ -33,6 +33,10 @@ def test_sessionize_gap_semantics(spark):
         (2, base + dt.timedelta(minutes=10), 100, "c", 2.0, "{}"),
         (3, base + dt.timedelta(minutes=50), 100, "c", 3.0, "{}"),  # gap > 30m → new session
         (4, base, 200, "c", 4.0, "{}"),
+        # a 1800.4 s gap exceeds 30 minutes even though the whole-second
+        # timestamps differ by exactly 1800
+        (5, base + dt.timedelta(milliseconds=100), 300, "c", 5.0, "{}"),
+        (6, base + dt.timedelta(minutes=30, milliseconds=500), 300, "c", 6.0, "{}"),
     ]
     df = spark.createDataFrame(
         rows, ["event_id", "ts", "user_id", "event_type", "value", "props"]
@@ -41,7 +45,7 @@ def test_sessionize_gap_semantics(spark):
         (r["user_id"], r["session_id"]): r["n_events"]
         for r in sessionize(df, gap_minutes=30).collect()
     }
-    assert out == {(100, 1): 2, (100, 2): 1, (200, 1): 1}
+    assert out == {(100, 1): 2, (100, 2): 1, (200, 1): 1, (300, 1): 1, (300, 2): 1}
 
 
 def test_stateful_streaming_sessionize_matches_batch(spark, sf_dir, tmp_path):
